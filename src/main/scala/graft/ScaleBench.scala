@@ -100,7 +100,7 @@ object ScaleBench {
     * here under the same timing discipline. */
   private val ExtraProbes: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
     "x_dedup_simhash64" -> ((s, dir) =>
-      graft.ops.Dedup.simhashPairs64(
+      graft.ops.Dedup.simhashPairs(
         graft.ops.Dedup.corpusWithDups(Tables.t(s, dir, "documents")))),
     // the pre-r14 vocabCoverage formulation: the one-partition ranking
     // window consumes the WHOLE vocabulary (no top-max(ks) cut) — kept
@@ -124,8 +124,12 @@ object ScaleBench {
           round(col("covered").cast("double") / col("total").cast("double"), 6)
             .as("share"))
     }),
-    "x_dedup_embedding_lsh_auto" -> ((s, dir) =>
-      graft.ops.Dedup.embeddingPairsLshAuto(Tables.t(s, dir, "embeddings"))),
+    "x_dedup_embedding_lsh_auto" -> ((s, dir) => {
+      import graft.ops.Dedup
+      val emb = Tables.t(s, dir, "embeddings")
+      Dedup.embeddingPairsLsh(Dedup.embCorpusWithDups(emb, withLabel = false),
+        0.9, Dedup.LshPlan.auto(emb.count(), 0.9))
+    }),
     // the r13 corpus-scale twins of the two families the 4th-decade
     // sweep measured super-linear (minhash exp 1.63 from r=2 banding
     // over a saturated ~1e6 hash space; ngram's prefix filter losing

@@ -284,17 +284,17 @@ object SemDedupAudit {
         // keeps the uncapped candidate volume inside the sandbox's
         // disk, giving a third (scale, divergence) point under a
         // stated config caveat instead of a faked geometry.
-        val (autoBands, autoPlanes, autoCap, _) =
-          graft.ops.Dedup.lshAutoPlan(n, simMin)
+        val auto = graft.ops.Dedup.LshPlan.auto(n, simMin)
         val bands = sys.env.get("SPARK_GRAFT_AUDIT_BANDS")
-          .map(_.toInt).getOrElse(autoBands)
+          .map(_.toInt).getOrElse(auto.bands)
         val planes = sys.env.get("SPARK_GRAFT_AUDIT_PLANES")
-          .map(_.toInt).getOrElse(autoPlanes)
+          .map(_.toInt).getOrElse(auto.planes)
         val capCorpus = sys.env.get("SPARK_GRAFT_AUDIT_CAP")
-          .map(_.toLong).getOrElse(autoCap)
+          .map(_.toLong).getOrElse(auto.maxBucket)
         def pairCount(input: org.apache.spark.sql.DataFrame, cap: Long): Long =
-          graft.ops.Dedup.embeddingPairsLsh(emb = input, simMin = simMin,
-            bands = bands, planesPerBand = planes, maxBucket = cap).count()
+          graft.ops.Dedup.embeddingPairsLsh(
+            graft.ops.Dedup.embCorpusWithDups(input, withLabel = false), simMin,
+            graft.ops.Dedup.LshPlan(bands, planes, cap, None)).count()
         // corpus truth: pairs found under the absolute cap vs uncapped
         val corpusCap = pairCount(emb, capCorpus)
         val corpusNoCap = pairCount(emb, Long.MaxValue)

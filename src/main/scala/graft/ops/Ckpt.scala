@@ -150,9 +150,18 @@ private[graft] object Sizing {
     * exactly that A/B (force off with a huge value / on with 0) — a
     * dev measurement knob, not a production switch; unset, the pinned
     * default applies. */
-  val MaterializeRowsMin: Long =
-    sys.props.get("graft.materializeRowsMin").map(_.toLong)
-      .getOrElse(1L << 17)
+  lazy val MaterializeRowsMin: Long =
+    materializeRowsMin(sys.props.get("graft.materializeRowsMin"))
+
+  /** The gate's value from the system property: unset = `1L << 17`. A
+    * malformed value fails with a message naming the property and the
+    * value (lazy above, so it surfaces as itself rather than as an
+    * `ExceptionInInitializerError` on first `Sizing` access). */
+  private[graft] def materializeRowsMin(prop: Option[String]): Long =
+    prop.fold(1L << 17) { v =>
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"graft.materializeRowsMin must be a whole number of rows; got '$v'"))
+    }
 
   def approxRows(df: DataFrame): Long = {
     val plan = df.queryExecution.optimizedPlan

@@ -516,7 +516,7 @@ object Similarity {
     * is then Σ popᵢ² ≈ n·targetClusterSize — LINEAR in the corpus for
     * a fixed target size. This is the scale-safe entry point the
     * LSH-auto scaladoc routes clustered-geometry mass to
-    * ([[graft.ops.Dedup.embeddingPairsLshAuto]]); the fixed-k census
+    * (`Dedup.embeddingPairsLsh(…, LshPlan.auto(…))`); the fixed-k census
     * above is the fixture-scale oracle form.
     *
     * Returns one row per input point: (vec_id, cluster_id, dropped) —
@@ -879,7 +879,8 @@ object Similarity {
           "Similarity.semDedupRecallAudit(emb), or pass " +
           "targetRecall = Some(r) to BUY a measured floor (the ladder " +
           "certifies or refuses — r16); recall-critical near-dup mass " +
-          "belongs to embeddingPairsLshAuto or a larger " +
+          "belongs to Dedup.embeddingPairsLsh(corpus, simMin, " +
+          "LshPlan.auto(n, simMin)) or a larger " +
           "targetClusterSize")
     // census-cost gate (r16 verdict #1): by this point the hierarchy
     // is fully materialized, so the census volume is KNOWN — sum of
@@ -915,7 +916,8 @@ object Similarity {
           "measures faster. Otherwise raise the budget, lower " +
           "targetClusterSize (smaller clusters, quadratically less " +
           "census), or route recall-critical near-dup mass to " +
-          "Dedup.embeddingPairsLshAuto (banded, volume-capped)")
+          "Dedup.embeddingPairsLsh(corpus, simMin, LshPlan.auto(n, " +
+          "simMin)) (banded, volume-capped)")
     }
     // 3. bounded within-cluster census — over ALL assignments (probe
     // rows included: they exist exactly so boundary pairs share a
@@ -1092,7 +1094,7 @@ object Similarity {
     *    ~4·10⁹-pair block [[graft.ops.Dedup.embeddingPairs]] refuses
     *    past — and recall is STILL below target: the budget is not
     *    purchasable inside the hierarchy. Recall-critical mass
-    *    belongs to [[graft.ops.Dedup.embeddingPairsLshAuto]] (banded,
+    *    belongs to `Dedup.embeddingPairsLsh(…, LshPlan.auto(…))` (banded,
     *    no depth compounding) or an explicit bounded exact census. */
   /** The planner's rung sequence: ×branch from the requested size,
     * CLAMPED to end at [[SemDedupPinnedMaxRows]] — the geometric
@@ -1235,7 +1237,8 @@ object Similarity {
             "constant, conf spark.graft.semdedup.censusSecsPerPair). " +
             "Raise maxPlanSeconds, lower targetRecall, or route " +
             "recall-critical near-dup mass to " +
-            "Dedup.embeddingPairsLshAuto (banded, no depth compounding)")
+            "Dedup.embeddingPairsLsh(corpus, simMin, LshPlan.auto(n, " +
+            "simMin)) (banded, no depth compounding)")
       }
       val t0 = System.nanoTime()
       val r = semDedupRecallAudit(emb, rung, simMin, auditSampleRows,
@@ -1269,7 +1272,8 @@ object Similarity {
         f"$SemDedupPinnedMaxRows census-block bound (per-cluster census " +
         "is pop-squared: a 2^16-row cluster is the same ~4e9-pair " +
         "block embeddingPairs refuses past). Recall-critical near-dup " +
-        "mass belongs to Dedup.embeddingPairsLshAuto (banded, no depth " +
+        "mass belongs to Dedup.embeddingPairsLsh(corpus, simMin, " +
+        "LshPlan.auto(n, simMin)) (banded, no depth " +
         "compounding), or run without targetRecall and own the " +
         "measured curve.")
     System.err.println(

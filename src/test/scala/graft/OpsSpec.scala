@@ -96,7 +96,7 @@ class OpsSpec extends SparkSpec {
       .select(col("id").as("vec_id"),
         array_repeat(lit(0.1f), 4).as("embedding"), lit("a").as("label"))
     val e = intercept[IllegalArgumentException] { Dedup.embeddingPairs(big) }
-    assert(e.getMessage.contains("embeddingPairsLshAuto"),
+    assert(e.getMessage.contains("LshPlan.auto"),
       s"refusal must route to the scale path: ${e.getMessage}")
     assert(e.getMessage.contains("forceExact"))
     // forceExact is the deliberate recall-audit escape hatch — same
@@ -120,7 +120,8 @@ class OpsSpec extends SparkSpec {
         if (sim >= 0.9) Some(r.getLong(0)) else None
       }.toSet
     assert(truth.size >= 5, "fixture should plant several cosine>=0.9 pairs")
-    val found = Dedup.embeddingPairsLsh(emb).collect()
+    val found = Dedup.embeddingPairsLsh(Dedup.embCorpusWithDups(emb, withLabel = false))
+      .collect()
       .filter(r => r.getLong(1) === r.getLong(0) + 1000000)
       .map(_.getLong(0)).toSet
     val recovered = (truth & found).size
@@ -1297,7 +1298,7 @@ class OpsSpec extends SparkSpec {
     val exactDups = docs.filter(col("doc_id") % 25 === 0)
       .select((col("doc_id") + 7000000L).as("doc_id"), col("text"))
     val corpus = docs.select(col("doc_id"), col("text")).unionByName(exactDups)
-    val pairs64 = Dedup.simhashPairs64(corpus).collect()
+    val pairs64 = Dedup.simhashPairs(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val planted = docs.filter(col("doc_id") % 25 === 0)
       .collect().map(_.getLong(0)).toSet
@@ -1311,19 +1312,12 @@ class OpsSpec extends SparkSpec {
     // and never more total pairs than 32-bit (whose random-collision
     // rate is ~1.3e-6/pair — the quadratic-junk lever width fixes)
     val perturbed = Dedup.corpusWithDups(docs)
-    val n64 = Dedup.simhashPairs64(perturbed).count()
+    val n64 = Dedup.simhashPairs(perturbed).count()
     val n32 = Dedup.simhashPairs32Oracle(perturbed).count()
     assert(n64 <= n32,
       s"64-bit ($n64 pairs) must not out-pair 32-bit ($n32) at equal hamming")
-    // the PUBLIC name means the 64-bit implementation (r12 verdict #3:
-    // the operator a user reaches for by name must be the scale-safe
-    // one; the 32-bit form is the oracle-pinned legacy entry)
-    val pub = Dedup.simhashPairs(perturbed).collect()
+    val pairs = Dedup.simhashPairs(perturbed).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val via64 = Dedup.simhashPairs64(perturbed).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(pub === via64,
-      "simhashPairs must delegate to the 64-bit implementation")
     // blocking completeness (r13: candidate generation moved from
     // 4×16-bit chunks to Manku C(6,3) 3-block combos for linear
     // candidate volume): the output must STILL be exactly the
@@ -1336,7 +1330,7 @@ class OpsSpec extends SparkSpec {
         bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
       .filter(col("hamming") <= 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(via64 === brute,
+    assert(pairs === brute,
       "combo blocking must reproduce the brute-force hamming truth exactly")
   }
 
@@ -1372,10 +1366,15 @@ class OpsSpec extends SparkSpec {
           concat_ws(":", col("id").cast("string"), j.cast("string"))),
           lit(2001L)).cast("double") / 1000.0 - 1.0).cast("float")).as("embedding"))
     assert(Dedup.lshRecallAudit(tiny, sampleRows = 100).isNaN)
+    // an empty frame sizes the one-row plan instead of throwing: zero
+    // pairs from the auto plan, an unmeasured (NaN) audit
+    val empty = tiny.limit(0)
+    assert(Dedup.embeddingPairsLsh(empty, 0.9, Dedup.LshPlan.auto(0L, 0.9)).count() === 0L)
+    assert(Dedup.lshRecallAudit(empty, sampleRows = 100).isNaN)
   }
 
   test("lshAutoParams: planes track corpus size, true-pair recall tracks the pinned banding") {
-    // planes grow with log2(n) so bucket population stays ~targetBucket
+    // planes grow with log2(n) so bucket population stays ~constant
     val (b1, p1) = Dedup.lshAutoParams(2000L, 0.9)
     val (b2, p2) = Dedup.lshAutoParams(200000L, 0.9)
     val (b3, p3) = Dedup.lshAutoParams(20000000L, 0.9)
@@ -1394,10 +1393,11 @@ class OpsSpec extends SparkSpec {
       assert(1.0 - math.pow(1.0 - q, b.toDouble) >= 0.95,
         s"banding ($b, $p) misses the recall target")
     }
-    // the knob guard: a non-positive targetBucket fails loudly instead
-    // of NaN-ing through ceil into a silently clamped planes=5
+    // the input guard: a similarity outside (0, 1) fails loudly instead
+    // of sizing a degenerate banding (at simMin 1 every band collides,
+    // q = 1, and the bands formula silently clamps to 2)
     intercept[IllegalArgumentException] {
-      Dedup.lshAutoParams(1000L, 0.9, targetBucket = 0L)
+      Dedup.lshAutoParams(1000L, 1.0)
     }
     // end-to-end against the right denominator: only planted dups whose
     // VERIFIED cosine clears simMin are true pairs (the fixture's
@@ -1406,10 +1406,11 @@ class OpsSpec extends SparkSpec {
     // pinned (10, 5) banding finds — both verify exactly, so any gap
     // is candidate recall alone.
     val emb = t(spark, sf, "embeddings")
-    val pinned = Dedup.embeddingPairsLsh(emb).collect()
+    val planted = Dedup.embCorpusWithDups(emb, withLabel = false)
+    val pinned = Dedup.embeddingPairsLsh(planted).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val auto = Dedup.embeddingPairsLshAuto(emb).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val auto = Dedup.embeddingPairsLsh(planted, 0.9, Dedup.LshPlan.auto(emb.count(), 0.9))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pinned.nonEmpty, "fixture must surface true pairs (vacuity guard)")
     assert((auto & pinned).size * 5 >= pinned.size * 4,
       s"auto found ${(auto & pinned).size} of ${pinned.size} pinned-banding pairs")
@@ -1857,5 +1858,14 @@ class OpsSpec extends SparkSpec {
     val jPlan = join.queryExecution.executedPlan.toString
     assert(jPlan.contains("BroadcastHashJoin"),
       s"term table must broadcast:\n$jPlan")
+  }
+
+  test("graft.materializeRowsMin: unset is 2^17, a malformed value names the property") {
+    import graft.ops.Sizing.materializeRowsMin
+    assert(materializeRowsMin(None) === (1L << 17))
+    assert(materializeRowsMin(Some("0")) === 0L)
+    val e = intercept[IllegalArgumentException](materializeRowsMin(Some("128k")))
+    assert(e.getMessage.contains("graft.materializeRowsMin") && e.getMessage.contains("128k"),
+      e.getMessage)
   }
 }

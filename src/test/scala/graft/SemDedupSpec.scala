@@ -67,17 +67,6 @@ class SemDedupSpec extends SparkSpec {
       s"(missed ${truth -- fast})")
   }
 
-  test("embeddingPairsLshAuto auditSampleRows wires the runtime audit") {
-    // the knob exists so a caller sees achieved recall without a
-    // separate call; the returned pair frame is unchanged by auditing
-    val emb = t(spark, sf, "embeddings")
-    val unaudited = Dedup.embeddingPairsLshAuto(emb)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val audited = Dedup.embeddingPairsLshAuto(emb, auditSampleRows = 1000L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(audited === unaudited)
-  }
-
   test("cluster sizes respect the target: per-cluster population stays bounded") {
     val fast = Similarity.semDedup(corpus01, targetClusterSize = 16L, branch = 4)
     val maxPop = fast.groupBy(col("cluster_id")).agg(count(lit(1)).as("pop"))
@@ -477,20 +466,6 @@ class SemDedupSpec extends SparkSpec {
     assert(noProbes.size < truthDrops.size,
       "without probes the forced split must measurably lose pairs - " +
         "otherwise this fixture pins nothing")
-  }
-
-  test("embeddingPairsLshAutoRaw: the non-planting entry equals the planted path's pairs") {
-    // the planting wrapper is the fixture/oracle twin; production
-    // banding over a caller's own corpus goes through the Raw entry.
-    // Factoring proof: Raw over an explicitly planted corpus emits
-    // exactly the planted path's pair set.
-    val emb = t(spark, sf, "embeddings")
-    val viaPlanted = Dedup.embeddingPairsLshAuto(emb)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaRaw = Dedup.embeddingPairsLshAutoRaw(
-        Dedup.embCorpusWithDups(emb, withLabel = false))
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaRaw === viaPlanted)
   }
 
   test("pinned census refuses a corpus; forcePinned is the bounded escape") {
